@@ -28,10 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bdc_collection_builder_spark.extensions.text import tokens
-from bdc_collection_builder_spark.functions.persist import (
-    ab_tracked_persist,
-    tracked_persist,
-)
+from bdc_collection_builder_spark.functions.persist import tracked_persist
 from bdc_collection_builder_spark.functions.rounds import note_rounds
 
 
@@ -250,9 +247,9 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
         sig = minhash_signatures_from_shingles(sh, n_hashes, "md5")
         # sig (one row per doc, 32 longs) feeds BOTH sides of the banded
         # self-join; without the persist the 32-min aggregate over the
-        # whole shingle table replays once per side (|frame| << producing
-        # work, the round-10 persist rule)
-        sig = ab_tracked_persist("minhash_sig", sig)
+        # whole shingle table replays once per side (the persist rule:
+        # |frame| << producing work)
+        sig = tracked_persist(sig)
     else:
         # Production path: collapse each shingle string to its xxhash64
         # ONCE, inside the per-doc array (shingles(hashed=True)) — the
@@ -266,7 +263,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
         sh = tracked_persist(shingles(docs, text_col, id_col, k, hashed=True))
         sig = minhash_signatures_from_shingles(sh, n_hashes, "prehashed")
         # same both-sides-of-the-self-join reuse as the md5 branch
-        sig = ab_tracked_persist("minhash_sig", sig)
+        sig = tracked_persist(sig)
 
     candidates = lsh_candidates(sig, bands, rows_per_band,
                                 engine_neutral)

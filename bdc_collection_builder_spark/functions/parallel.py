@@ -27,17 +27,11 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     fewer — one tiny shuffle locally, a no-op on an already-parallel
     production scan.
 
-    ``$SPARK_GRAFT_SPREAD_TARGET`` overrides the default goal — a
-    measurement knob only (round-11 item 4 swept 4/8/16/32 on the LSH
-    family at 32 cores: flat within noise, so the CPU-spreading
-    default stands; the spread stages are compute-bound and want
-    cores, unlike shuffle sizing which wants bytes)."""
-    import os
-
+    The goal is cores, not bytes: the spread stages are compute-bound
+    (unlike shuffle sizing, which wants bytes). Goals of 4/8/16/32 on
+    the LSH family at 32 cores measured flat within noise."""
     spark = df.sparkSession
-    goal = target or int(os.environ.get(
-        "SPARK_GRAFT_SPREAD_TARGET", "0")) \
-        or spark.sparkContext.defaultParallelism
+    goal = target or spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < goal:
         return df.repartition(goal)
     return df

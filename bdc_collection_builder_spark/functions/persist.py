@@ -4,8 +4,8 @@ Several plans ``persist()`` an intermediate their plan reads more than
 once (graph edge lists, shingle tables, k-means assignments). The
 DataFrames they return are lazy, so the query function itself cannot
 unpersist after "its" action — it never sees the action. Left alone,
-a driver session that runs all ~212 registered queries accumulates
-every such cache block in executor memory (ADVICE-r3).
+a driver session that runs every registered query accumulates every
+such cache block in executor memory.
 
 The registry's ``@query`` wrapper closes the loop: registering
 persists through :func:`tracked_persist` and draining them at the NEXT
@@ -35,22 +35,6 @@ def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
         else df.persist()
     _TRACKED.append(df)
     return df
-
-
-def ab_tracked_persist(tag: str, df: DataFrame) -> DataFrame:
-    """:func:`tracked_persist` with a measurement escape hatch: when
-    ``tag`` appears in ``$SPARK_GRAFT_AB_NOPERSIST`` (comma-separated)
-    the frame is returned UNPERSISTED. This is the round-11 A/B
-    instrument for persist sites whose local win is in doubt
-    (VERDICT-r10 item 3): one warmed session alternates the env var
-    between runs, so both variants are measured under identical
-    machine conditions. Unset (every production/bench/driver run),
-    it is exactly tracked_persist."""
-    import os
-
-    if tag in os.environ.get("SPARK_GRAFT_AB_NOPERSIST", "").split(","):
-        return df
-    return tracked_persist(df)
 
 
 def drain_tracked() -> int:

@@ -15,10 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bdc_collection_builder_spark.functions.persist import (
-    ab_tracked_persist,
-    tracked_persist,
-)
+from bdc_collection_builder_spark.functions.persist import tracked_persist
 from bdc_collection_builder_spark.functions.rounds import note_rounds
 from bdc_collection_builder_spark.plans._util import scratch_dir, t
 from bdc_collection_builder_spark.plans.registry import query
@@ -2976,10 +2973,9 @@ def cu_filter_funnel(spark, sf_dir):
         .otherwise("kept")
     )
     # <=5 rows, corpus-scale producer, consumed by the total AND the
-    # output — without the persist the whole funnel pipeline ran twice
-    # (round 10; the persist rule: |frame| << producing work).
-    grouped = ab_tracked_persist(
-        "funnel_grouped",
+    # output — without the persist the whole funnel pipeline runs twice
+    # (the persist rule: |frame| << producing work).
+    grouped = tracked_persist(
         feats.select(stage.alias("stage"))
         .groupBy("stage")
         .agg(F.count("*").cast("bigint").alias("n_docs")))

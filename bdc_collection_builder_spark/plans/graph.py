@@ -40,10 +40,7 @@ from pyspark.sql import functions as F
 
 from bdc_collection_builder_spark.extensions.dedup import md5_hash60
 from bdc_collection_builder_spark.functions.iterate import iterate
-from bdc_collection_builder_spark.functions.persist import (
-    ab_tracked_persist,
-    tracked_persist,
-)
+from bdc_collection_builder_spark.functions.persist import tracked_persist
 from bdc_collection_builder_spark.plans._util import t
 from bdc_collection_builder_spark.plans.registry import query
 
@@ -430,8 +427,8 @@ def gr_hits_hubs_authorities(spark, sf_dir):
     def l2_attach(df):
         # df (node-sized, produced by an edge join + aggregate) feeds
         # the normalizer AND the output — unpersisted, each half-step
-        # computed its pull twice (round 10, the persist rule).
-        df = ab_tracked_persist("hits_l2", df)
+        # computes its pull twice (the persist rule).
+        df = tracked_persist(df)
         nrm = df.agg(
             F.sqrt(F.sum(F.col("score") * F.col("score"))).alias("nrm"))
         return (df.crossJoin(F.broadcast(nrm))

@@ -248,21 +248,16 @@ def sk_kmv_overlap(spark, sf_dir):
     # The distinct (source, h) frame feeds THREE consumers (the
     # bottom-k window and both sides of the exact-overlap self-join),
     # and the sketch `sk` three more (pair discovery + both union
-    # legs). Round 10 persisted both frames (cross-session minima
-    # showed a win); VERDICT-r10 item 3 ordered a quiet re-measurement
-    # and the round-11 alternating A/B (scripts/ab_persist.py, one
-    # warmed session, 8 interleaved pairs x 3 sessions) reproducibly
-    # showed the OPPOSITE: both-unpersisted min 2.15s vs
-    # both-persisted 2.76s at sf0.1 — the two sequential
-    # materialization barriers plus cache writes cost more than the
-    # pipelined replays of the 16-byte-row chain (single-site
-    # persists measured worse than either extreme across two
-    # sessions: one barrier still paid, half the replays kept).
-    # Reverted per the round-10 scalar-attach lesson:
-    # losses get reverted, the at-scale argument lives here — at
-    # 100 TB the corpus-scale tokenize + 5-gram explode chain replay
-    # is a real pass per consumer and a production deployment would
-    # persist BOTH frames (all-or-nothing, never one).
+    # legs). Neither is persisted: over 8 interleaved pairs in each of
+    # 3 warmed sessions at sf0.1, both-unpersisted measured min 2.15s
+    # vs both-persisted 2.76s — the two sequential materialization
+    # barriers plus cache writes cost more than the pipelined replays
+    # of the 16-byte-row chain. Persisting just one frame measured
+    # worse than either extreme (one barrier still paid, half the
+    # replays kept). At 100 TB the corpus-scale tokenize + 5-gram
+    # explode chain replay is a real pass per consumer, and a
+    # production deployment would persist BOTH frames (all-or-nothing,
+    # never one).
     sh = (
         tok_df.select("source", F.explode(F.array_distinct(grams)).alias("g"))
         .select("source", md5_hash60(F.col("g")).alias("h"))

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -223,128 +224,157 @@ def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Touch every table so codegen/classloading noise stays out of the
+    first measured query, then run one tiny mapInPandas so the Python
+    workers are forked and reused before any measured UDF stage (a cold
+    spawn of local[N] workers costs seconds and happens once)."""
+    from bdc_collection_builder_spark.sources.tables import TABLES, load_table
+
+    for name in TABLES:
+        load_table(spark, sf_dir, name).limit(1).collect()
+    materialize(spark.range(256).repartition(32).mapInPandas(
+        lambda it: it, "id long"))
+
+
+def time_once(spark, fn, sf_dir: str) -> float:
+    """Seconds to build and fully materialize ``fn(spark, sf_dir)``.
+
+    The cache is cleared afterwards, so every run is cold: queries that
+    persist() intermediates would otherwise serve the next run from the
+    previous run's cache blocks through Spark's canonicalized-plan
+    lookup."""
+    start = time.perf_counter()
+    materialize(fn(spark, sf_dir))
+    elapsed = time.perf_counter() - start
+    spark.catalog.clearCache()
+    return elapsed
+
+
+# Stdout tail budget for the compact line: a harness that keeps only the
+# last 2000 chars of stdout must still see the whole line.
+COMPACT_BUDGET = 1980
+
+
+def compact_line(full: dict) -> str:
+    """The last stdout line: the one a tail-capturing harness parses.
+
+    Carries the suite total, every 1-dp query median (the 3 BASELINE
+    proxies included) and ``noisy_min``: each noisy-flagged entry
+    (max/min spread > 2.5) mapped to its MIN, the contention-robust
+    estimator (contention only ever adds time), so a contaminated
+    median is visible AND replaceable downstream. Everything else
+    lives in BENCH_FULL.json. Over budget, the least-noisy
+    ``noisy_min`` entries go first (the worst spreads need a
+    replacement estimator most), then ``census_over5s`` entries; a line
+    still over budget raises instead of being cut off by the capture.
+    """
+    spread = full["query_spread"]
+    noisy_min = {n: round(spread[n]["min"], 1) for n in full["noisy_queries"]}
+    compact = {
+        "metric": full["metric"],
+        "value": round(full["value"], 2),
+        "unit": full["unit"],
+        "queries": {n: round(t, 1) for n, t in full["queries"].items()},
+        "noisy_min": noisy_min,
+        "sf": full["sf"],
+    }
+    # empty on every passing run, so it costs chars only when it fires
+    if full["census_over5s_untriaged"]:
+        compact["census_over5s"] = list(full["census_over5s_untriaged"])
+
+    def line() -> str:
+        return json.dumps(compact, separators=(",", ":"))
+
+    trim_order = sorted(
+        noisy_min,
+        key=lambda n: spread[n]["max"] / max(spread[n]["min"], 1e-9))
+    while len(line()) > COMPACT_BUDGET and trim_order:
+        noisy_min.pop(trim_order.pop(0))
+    while len(line()) > COMPACT_BUDGET and compact.get("census_over5s"):
+        compact["census_over5s"].pop()
+    if len(line()) > COMPACT_BUDGET:
+        raise ValueError(
+            f"compact bench line is {len(line())} chars, over the "
+            f"{COMPACT_BUDGET}-char budget with noisy_min and "
+            f"census_over5s trimmed")
+    return line()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     from bdc_collection_builder_spark.plans.registry import QUERY_REGISTRY, all_queries
     from bdc_collection_builder_spark.session import get_spark
-    from bdc_collection_builder_spark.sources.tables import TABLES, load_table
 
     all_queries()
     spark = get_spark("bench")
+    warm_up(spark, sf_dir)
 
-    # Warmup: touch every table so codegen/classloading noise stays out
-    # of the first measured query, and run one tiny mapInPandas so the
-    # Python workers are forked+reused before any measured UDF stage
-    # (cold spawn of local[N] workers costs seconds and is one-time).
-    for name in TABLES:
-        load_table(spark, sf_dir, name).limit(1).collect()
-    spark.range(256).repartition(32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode(
-        "overwrite").save()
-
-    # Median-of-N per query (VERDICT-r3: best-of-2 let unchanged plans
-    # bounce ±25% round-to-round — dd_minhash 2.06→1.37→1.74s — so the
-    # delta table cried wolf). Local-mode wall times carry scheduler/GC
-    # noise a real cluster amortizes; the median over N runs is the
-    # steady estimator, and min/max are kept in the JSON so real
-    # regressions are distinguishable from spread.
-    #
-    # Every run is COLD: the cache clears after each run, so repeat
-    # runs of persist()-reusing queries (graph suite, semantic dedup)
-    # no longer hit the previous run's cache blocks through Spark's
-    # canonicalized-plan cache lookup. Rounds ≤3 measured min-of-2
-    # where run 2 was cache-warm, so r3→r4 deltas on those queries
-    # (e.g. gr_hits ~1.3→~2.3s) are the estimator change, not a plan
-    # regression — plan fingerprints in PLANMAP.md are unchanged.
+    # Median-of-N per query: with best-of-2, unchanged plans bounced
+    # ±25% between runs (dd_minhash 2.06→1.37→1.74s). Local-mode wall
+    # times carry scheduler/GC noise a real cluster amortizes; the
+    # median over N cold runs is the steady estimator, and min/max are
+    # kept in the JSON so real regressions are distinguishable from
+    # spread.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     times: dict[str, float] = {}
     spread: dict[str, dict[str, float]] = {}
     for name in BENCH_QUERIES:
         fn = QUERY_REGISTRY[name].spark_fn
-        samples = []
-        for _ in range(n_runs):
-            start = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - start)
-            # Queries that persist() intermediates (dedup paths) would
-            # otherwise serve later runs from cache.
-            spark.catalog.clearCache()
-        samples.sort()
-        mid = len(samples) // 2
-        median = (samples[mid] if len(samples) % 2
-                  else (samples[mid - 1] + samples[mid]) / 2)
-        times[name] = round(median, 3)
-        spread[name] = {"min": round(samples[0], 3),
-                        "max": round(samples[-1], 3)}
+        samples = [time_once(spark, fn, sf_dir) for _ in range(n_runs)]
+        times[name] = round(statistics.median(samples), 3)
+        spread[name] = {"min": round(min(samples), 3),
+                        "max": round(max(samples), 3)}
 
     # BASELINE.md §4 proxies: band-expression pixel throughput, scene
-    # pipeline throughput, incremental merge cost. Best-of-2 like the
-    # queries — the first run pays Python-worker spawn + codegen.
-    # Re-warm the Python workers first: the JVM-only query block above
-    # can outlive their idle reaper, and a cold respawn would bill ~3s
-    # of fork cost to whichever proxy runs first.
-    spark.range(256).repartition(32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode(
-        "overwrite").save()
+    # pipeline throughput, incremental merge cost, median of 3. Each
+    # proxy times only its action, past its own setup, so it keeps its
+    # own timer. Re-warm the Python workers first: the JVM-only query
+    # block above can outlive their idle reaper, and a cold respawn
+    # would bill ~3s of fork cost to whichever proxy runs first.
+    warm_up(spark, sf_dir)
     for key, proxy in [
         ("proxy_px_expression_2m", lambda: _px_expression_proxy(spark)),
         ("proxy_pipeline_scenes", lambda: _pipeline_proxy(spark, sf_dir)),
         ("proxy_merge_batch", lambda: _merge_proxy(spark, sf_dir)),
     ]:
-        samples = sorted(proxy() for _ in range(3))
-        times[key] = samples[1]  # median of 3
-        spread[key] = {"min": samples[0], "max": samples[-1]}
+        samples = [proxy() for _ in range(3)]
+        times[key] = statistics.median(samples)
+        spread[key] = {"min": min(samples), "max": max(samples)}
 
-    heavy: dict[str, float] = {}
-    for name in HEAVY_QUERIES:
-        fn = QUERY_REGISTRY[name].spark_fn
-        start = time.perf_counter()
-        materialize(fn(spark, sf_dir))
-        heavy[name] = round(time.perf_counter() - start, 3)
-        spark.catalog.clearCache()
+    heavy = {name: round(time_once(spark, QUERY_REGISTRY[name].spark_fn,
+                                   sf_dir), 3)
+             for name in HEAVY_QUERIES}
 
-    # Census (VERDICT-r9 task 3): ONE warm run of every registered
-    # query not already measured above, registry order, cache cleared
-    # between runs. This exists to catch unknown >5s tails by process
-    # — tj_resample_interpolate sat at ~7s for rounds without anyone
-    # noticing because only suite/heavy members were ever timed. The
-    # census is NOT round-over-round comparable (single run, no
-    # median); it feeds exactly one signal: the untriaged->5s gate
-    # below. The five store-seam queries (s27/s33-s36) stay out of
-    # the SUITE because their module-level outcome caches make only
-    # the first in-process invocation measure the engine — but the
-    # census IS a single first invocation, so their numbers here are
-    # honest build costs.
+    # Census: ONE warm run of every registered query not already
+    # measured above, in registry order. It exists to catch unknown >5s
+    # tails by process — tj_resample_interpolate sat at ~7s unnoticed
+    # while only suite/heavy members were timed. The census is NOT
+    # comparable between runs (single sample, no median); it feeds
+    # exactly one signal: the untriaged->5s gate below. The store-seam
+    # queries (s27/s33-s36) stay out of the SUITE because their
+    # module-level outcome caches make only the first in-process
+    # invocation measure the engine — but the census IS a single first
+    # invocation, so their numbers here are honest build costs.
     census: dict[str, float] = {}
     census_retried: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_CENSUS", "1") != "0":
         measured = set(times) | set(heavy)
         for name in QUERY_REGISTRY:
-            if name in measured:
-                continue
-            fn = QUERY_REGISTRY[name].spark_fn
-            start = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            census[name] = round(time.perf_counter() - start, 3)
-            spark.catalog.clearCache()
-        # Measurement fix (round 10, documented in OPTIMIZATION_r10.md):
-        # a census entry is ONE sample, so a contention burst on this
-        # machine (storms measured at 10-40x on otherwise sub-2s
-        # queries) can push any query past the 5s gate for one round —
-        # the round-10 closing runs tripped three DIFFERENT quiet-day
-        # sub-3s queries across consecutive runs. A >5s sample now gets
-        # exactly one confirmation run and keeps the MIN: a storm
-        # sample does not reproduce, a genuine tail does. The gate's
-        # purpose (catch unknown reproducible tails) is unchanged; the
-        # first sample is preserved in the artifact via census_retried.
+            if name not in measured:
+                census[name] = round(time_once(
+                    spark, QUERY_REGISTRY[name].spark_fn, sf_dir), 3)
+        # A census entry is ONE sample, so a contention burst (measured
+        # at 10-40x on otherwise sub-2s queries) can push any query
+        # past the 5s gate. An untriaged >5s sample gets exactly one
+        # confirmation run and keeps the MIN: a storm sample does not
+        # reproduce, a genuine tail does. The first sample is kept in
+        # the artifact as census_retried_first_sample.
         for name, t0 in list(census.items()):
             if t0 > 5.0 and name not in CENSUS_TRIAGED:
-                fn = QUERY_REGISTRY[name].spark_fn
-                start = time.perf_counter()
-                materialize(fn(spark, sf_dir))
-                again = round(time.perf_counter() - start, 3)
-                spark.catalog.clearCache()
+                again = round(time_once(
+                    spark, QUERY_REGISTRY[name].spark_fn, sf_dir), 3)
                 census_retried[name] = t0
                 census[name] = min(t0, again)
     census_over5s = sorted(
@@ -449,57 +479,13 @@ def main() -> None:
     with open(os.path.join(here, "BENCH_FULL.json"), "w") as fh:
         json.dump(full, fh, indent=1)
     print(json.dumps(full))
-    # Compact line — the ONE line the driver parses (its stdout tail
-    # capture keeps only the last 2000 chars). Round-11 contract fix
-    # (VERDICT-r10 What's-wrong #1/#2, Next-round item 1):
-    #   * the 3 BASELINE proxies are BACK in the compact queries map
-    #     (r10 trimmed them "for budget" and the driver recorded them
-    #     as dropped_from_bench — a reporting regression);
-    #   * `noisy_min` maps every noisy-flagged suite entry (max/min
-    #     spread > 2.5) to its per-query MIN — the contention-robust
-    #     estimator (contention only ever adds time) — so a storm-
-    #     contaminated median is visible AND replaceable downstream.
-    # The 65-entry queries map is ~1.8k chars on its own, so the line
-    # can no longer also carry heavy/clean_queries_total/delta_worst
-    # (the r10 line was 1984 chars with 60 entries and no proxies —
-    # at the capture limit already). Those moved to (a) the committed
-    # BENCH_FULL.json (3-dp, everything, always) and (b) a short
-    # "heavy" JSON line printed immediately BEFORE the compact line:
-    # the driver parses only the last line, but its 2000-char tail
-    # still shows the heavy line on quiet runs. A length guard keeps
-    # the compact line itself under 1980 chars by trimming the
-    # least-noisy noisy_min entries first (the worst spreads are the
-    # medians most in need of a replacement estimator).
+    # The full record is long; a short "heavy" line goes out next, so
+    # the stdout tail shows it just above the compact last line.
     print(json.dumps(
         {"heavy": {n: round(t, 2) for n, t in heavy.items()}},
         separators=(",", ":")))
-    noisy_min = {n: round(spread[n]["min"], 1) for n in sorted(noisy)}
-    compact = {
-        "metric": "headline_query_suite_wall",
-        "value": round(total, 2),
-        "unit": "sec",
-        "queries": {n: round(t, 1) for n, t in times.items()},
-        "noisy_min": noisy_min,
-        "sf": sf_val,
-    }
-    # the census gate list is empty on every passing round (the
-    # committed BENCH_FULL.json + test_artifacts enforce it); spend
-    # the ~20 chars on it only when it actually fires
-    if census_over5s:
-        compact["census_over5s"] = census_over5s
-
-    def _clen() -> int:
-        return len(json.dumps(compact, separators=(",", ":")))
-
-    trim_order = sorted(
-        noisy_min,
-        key=lambda n: spread[n]["max"] / max(spread[n]["min"], 1e-9))
-    while _clen() > 1980 and trim_order:
-        compact["noisy_min"].pop(trim_order.pop(0))
-    while _clen() > 1980 and compact.get("census_over5s"):
-        compact["census_over5s"].pop()
-    print(json.dumps(compact, separators=(",", ":")))
     spark.stop()
+    print(compact_line(full))
 
 
 def _px_expression_proxy(spark) -> float:

@@ -1,23 +1,20 @@
-"""Time named registered queries through the noop sink (guide §1.4).
+"""Time named registered queries through the noop sink.
 
 Usage: python scripts/time_queries.py name1,name2 [n_runs]
 
 Runs each named query ``n_runs`` times (default 5) under the project
-session at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1), clearing the cache
-between runs exactly like bench.py, and prints the sorted samples plus
-the median. Used for the pairwise before/after measurement of a single
-optimization target without paying for the whole bench suite; the
-warmup mirrors bench.py (table touch + one mapInPandas) so numbers are
-comparable to suite medians.
+session at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) and prints the
+samples in run order plus the median. Warm-up and every timed run go
+through bench.py's ``warm_up`` and ``time_once``, so the numbers are
+comparable to suite medians without paying for the whole suite.
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
-import time
 
-os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -26,35 +23,23 @@ def main() -> int:
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import time_once, warm_up
     from bdc_collection_builder_spark.plans.registry import (
         QUERY_REGISTRY, all_queries,
     )
     from bdc_collection_builder_spark.session import get_spark
-    from bdc_collection_builder_spark.sources.tables import TABLES, load_table
 
     all_queries()
     spark = get_spark("time_queries")
-    for name in TABLES:
-        load_table(spark, sf_dir, name).limit(1).collect()
-    spark.range(256).repartition(32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode(
-        "overwrite").save()
-
+    warm_up(spark, sf_dir)
     for name in names:
         fn = QUERY_REGISTRY[name].spark_fn
         samples = []
         for i in range(n_runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
-            start = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            samples.append(round(time.perf_counter() - start, 3))
-            spark.catalog.clearCache()
-        ordered = sorted(samples)
-        mid = len(ordered) // 2
-        median = (ordered[mid] if len(ordered) % 2
-                  else (ordered[mid - 1] + ordered[mid]) / 2)
-        print(f"{name}: median={median:.3f} samples={samples}")
+            samples.append(round(time_once(spark, fn, sf_dir), 3))
+        print(f"{name}: median={statistics.median(samples):.3f} "
+              f"samples={samples}")
     spark.stop()
     return 0
 
